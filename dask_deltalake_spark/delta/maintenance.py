@@ -35,7 +35,7 @@ from dask_deltalake_spark.delta.protocol import (
     dv_unique_id,
     now_ms,
 )
-from dask_deltalake_spark.delta.writer import write_commit
+from dask_deltalake_spark.delta.writer import _write_files_native, write_commit
 
 HISTORY_COLUMNS = [
     "timestamp",
@@ -1498,25 +1498,9 @@ def optimize(
     from dask_deltalake_spark.delta.protocol import stats_spec_for
 
     _stats_spec = stats_spec_for(snap)
-    data_root = log.store.local_path(table_path)
-    if data_root is not None:
-        from dask_deltalake_spark.delta.writer import run_partition_write
-
-        add_rows = run_partition_write(
-            df, data_root, partition_by, stats_spec=_stats_spec
-        )
-    else:
-        # no local mapping (object store): the JVM-native write path
-        # stages through Hadoop FS / the store's spark_path mapping and
-        # renames into the table through the LogStore seam — the same
-        # split to_delta(engine="native") uses (writer.py). Closes the
-        # r6 S16 gap: OPTIMIZE (and thereby DV purge) works on
-        # pure-seam tables.
-        from dask_deltalake_spark.delta.writer import _write_files_native
-
-        add_rows = _write_files_native(
-            df, table_path, partition_by, stats_spec=_stats_spec
-        )
+    add_rows = _write_files_native(
+        df, table_path, partition_by, stats_spec=_stats_spec
+    )
 
     ts = now_ms()
     actions: list[dict] = [

@@ -46,6 +46,7 @@ from dask_deltalake_spark.delta.protocol import (
     prune_by_stats,
     prune_partitions,
 )
+from dask_deltalake_spark.delta.writer import _write_files_native
 
 
 def _commit_with_dml_retry(
@@ -189,23 +190,10 @@ def _write_change_data(table_path: str, snap, change_data) -> list:
         )
         partition_by = [l2p.get(c, c) for c in partition_by]
     _stats_spec = stats_spec_for(snap)
-    data_root = _local_data_root(table_path)
     cdc_root = os.path.join(table_path, "_change_data")
-    if data_root is not None:
-        from dask_deltalake_spark.delta.writer import run_partition_write
-
-        cdc_rows = run_partition_write(
-            change_data,
-            os.path.join(data_root, "_change_data"),
-            partition_by,
-            stats_spec=_stats_spec,
-        )
-    else:
-        from dask_deltalake_spark.delta.writer import _write_files_native
-
-        cdc_rows = _write_files_native(
-            change_data, cdc_root, partition_by, stats_spec=_stats_spec
-        )
+    cdc_rows = _write_files_native(
+        change_data, cdc_root, partition_by, stats_spec=_stats_spec
+    )
     if not cdc_rows:
         import io as _io
         import uuid as _uuid
@@ -315,22 +303,9 @@ def _rewrite_and_commit(
     from dask_deltalake_spark.delta.protocol import stats_spec_for
 
     _stats_spec = stats_spec_for(snap)
-    data_root = _local_data_root(table_path)
-    if data_root is not None:
-        from dask_deltalake_spark.delta.writer import run_partition_write
-
-        add_rows = run_partition_write(
-            new_data, data_root, partition_by, stats_spec=_stats_spec
-        )
-    else:
-        # no local mapping (object store): JVM-native staging + seam
-        # rename, same split as to_delta(engine="native") — DML COW
-        # rewrites work on pure-seam tables (closes the r6 S16 gap)
-        from dask_deltalake_spark.delta.writer import _write_files_native
-
-        add_rows = _write_files_native(
-            new_data, table_path, partition_by, stats_spec=_stats_spec
-        )
+    add_rows = _write_files_native(
+        new_data, table_path, partition_by, stats_spec=_stats_spec
+    )
 
     cdc_actions: list = []
     if change_data is not None:
@@ -411,19 +386,6 @@ def _translate(dnf: list, l2p: Optional[dict]) -> list:
     from dask_deltalake_spark.delta.column_mapping import translate_dnf
 
     return translate_dnf(dnf, l2p)
-
-
-def _local_data_root(table_path: str) -> Optional[str]:
-    """os-level root for the DML rewrite's Python-worker file writes:
-    resolves locally mapped schemes (mock:); None for unmapped object
-    stores, where the caller takes the JVM-native staging + LogStore
-    seam rename path instead (never plain file I/O against an
-    unresolved scheme — rewrite files would land in a junk relative
-    directory while the commit still published, corrupting the
-    table)."""
-    from dask_deltalake_spark.delta.logstore import store_for
-
-    return store_for(table_path).local_path(table_path)
 
 
 def _read_files(
@@ -1284,19 +1246,9 @@ def _update_merge_on_read(
     from dask_deltalake_spark.delta.protocol import stats_spec_for
 
     _stats_spec = stats_spec_for(snap)
-    data_root = _local_data_root(table_path)
-    if data_root is not None:
-        from dask_deltalake_spark.delta.writer import run_partition_write
-
-        add_rows = run_partition_write(
-            updated, data_root, partition_by, stats_spec=_stats_spec
-        )
-    else:
-        from dask_deltalake_spark.delta.writer import _write_files_native
-
-        add_rows = _write_files_native(
-            updated, table_path, partition_by, stats_spec=_stats_spec
-        )
+    add_rows = _write_files_native(
+        updated, table_path, partition_by, stats_spec=_stats_spec
+    )
 
     version = _mor_commit(
         table_path,

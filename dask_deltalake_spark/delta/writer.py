@@ -9,14 +9,17 @@ gate (writer.py:254-259), per-file min/max/nullCount stats
 
 Spark-first execution:
 
-- Phase 1 (executors): `df.mapInPandas` — every task streams its
-  Arrow batches into snappy parquet files under the table dir (one
-  file per hive partition value per task, no global shuffle — the
-  reference's documented behavior, writer.py:177-180) and emits one
-  row of add-action metadata per written file. Optionally
-  `shuffle=True` repartitions by the partition columns first so each
-  partition value is written by one task (fewer, larger files — the
-  right default at 100 TB; kept opt-in for reference parity).
+- Phase 1 (executors): the JVM parquet writer (``_write_files_native``)
+  writes snappy files into a staging dir — one file per hive
+  partition value per task, no global shuffle (the reference's
+  documented behavior, writer.py:177-180) — and a footer-harvest pass
+  turns each file's parquet footer into its add action's stats, after
+  which the files are renamed into the table layout. Every append,
+  DML rewrite, OPTIMIZE and CDC ``_change_data`` write takes this one
+  path. Optionally ``shuffle=True`` repartitions by the partition
+  columns first so each partition value is written by one task.
+  ``to_delta(engine="arrow")`` alone keeps the reference's pyarrow
+  topology: a ``mapInArrow`` pass writes the files from Python workers.
 - Phase 2 (driver): all add actions (a metadata-sized collect) are
   committed as one atomic `_delta_log` entry via hard-link
   put-if-absent, giving optimistic-concurrency conflict *detection*
@@ -85,20 +88,33 @@ def _partition_str(v) -> Optional[str]:
     return str(v)
 
 
-def _write_partition_factory(
+def _write_partition_factory_arrow(
     table_path: str,
     partition_by: list[str],
     arrow_schema_bytes: bytes,
     stats_spec: tuple = (32, None),
 ):
-    """Build the executor-side writer fn. All state is serialized into
-    the closure (arrow schema via IPC bytes — pa.Schema pickles poorly
-    across versions). ``stats_spec`` = (max_cols, stats_columns) from
-    protocol.stats_column_spec — the dataSkippingNumIndexedCols /
-    dataSkippingStatsColumns table properties."""
+    """Executor-side writer fn for ``to_delta(engine="arrow")``, the
+    reference's pyarrow topology (reference writer.py:84-131), run as
+    ``df.mapInArrow``: each task writes its incoming Arrow batches to
+    parquet as they arrive, one file per hive partition value, and
+    emits one row of add-action metadata per written file. All state
+    is serialized into the closure (arrow schema via IPC bytes —
+    pa.Schema pickles poorly across versions). ``stats_spec`` =
+    (max_cols, stats_columns) from protocol.stats_column_spec.
 
-    def write_partition(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    Per-file stats come from ``StatsAccumulator`` fed with each
+    group's rows as pandas — the same conversion Spark's own
+    arrow→pandas path makes, so a file's stats JSON equals
+    ``stats_from_pandas`` over that file's rows (pinned in
+    tests/test_delta_write.py). Tz-aware timestamps are normalized to
+    naive UTC before the conversion whatever the session time zone,
+    so the stats describe the instants the file stores. Every other
+    write (appends, DML, OPTIMIZE, CDC) goes through
+    :func:`_write_files_native`, whose stats come from the parquet
+    footer instead."""
+
+    def write_partition(batches) -> "Iterator":
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -124,152 +140,13 @@ def _write_partition_factory(
                 out.append(v)
             return tuple(out)
 
-        writers: dict[tuple, tuple] = {}  # pkey -> (writer, relpath, stats_accum)
-
-        def get_writer(pkey: tuple):
-            if pkey in writers:
-                return writers[pkey]
-            rel_dir = _hive_dir(partition_by, pkey) if partition_by else ""
-            fname = f"part-{uuid.uuid4().hex}.snappy.parquet"
-            rel_path = f"{rel_dir}/{fname}" if rel_dir else fname
-            abs_dir = os.path.join(table_path, rel_dir) if rel_dir else table_path
-            os.makedirs(abs_dir, exist_ok=True)
-            w = pq.ParquetWriter(
-                os.path.join(table_path, rel_path),
-                data_schema,
-                compression="snappy",
-            )
-            state = (
-                w,
-                rel_path,
-                {
-                    "stats": StatsAccumulator(
-                        max_cols=stats_spec[0], stats_columns=stats_spec[1]
-                    ),
-                    "rows": 0,
-                },
-            )
-            writers[pkey] = state
-            return state
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if partition_by:
-                groups = pdf.groupby(partition_by, dropna=False, sort=False)
-                items = [
-                    (k if isinstance(k, tuple) else (k,), g)
-                    for k, g in groups
-                ]
-            else:
-                items = [((), pdf)]
-            for pkey, g in items:
-                pkey = norm_pkey(pkey)
-                w, rel_path, acc = get_writer(pkey)
-                gdata = g[data_fields]
-                tbl = pa.Table.from_pandas(gdata, schema=data_schema, preserve_index=False)
-                w.write_table(tbl)
-                # streaming stats merge — the task never retains row data
-                acc["stats"].update(gdata)
-                acc["rows"] += len(gdata)
-
-        out_rows = []
-        for pkey, (w, rel_path, acc) in writers.items():
-            w.close()
-            abs_path = os.path.join(table_path, rel_path)
-            pvals = {
-                col: _partition_str(v) for col, v in zip(partition_by, pkey)
-            }
-            stats = acc["stats"].to_json() if acc["rows"] else None
-            out_rows.append(
-                {
-                    "path": rel_path,
-                    "size": os.path.getsize(abs_path),
-                    "partition_json": json.dumps(pvals),
-                    "num_records": acc["rows"],
-                    "stats": stats,
-                }
-            )
-        if out_rows:
-            yield pd.DataFrame(out_rows)
-
-    return write_partition
-
-
-def _write_partition_factory_arrow(
-    table_path: str,
-    partition_by: list[str],
-    arrow_schema_bytes: bytes,
-    stats_spec: tuple = (32, None),
-    session_tz: str = "UTC",
-):
-    """mapInArrow twin of :func:`_write_partition_factory` (r17,
-    VERDICT r16 #1): the incoming Arrow batches are written to parquet
-    DIRECTLY (no pandas→Arrow reconversion of the row data — measured
-    1.57 → 1.14 s per 600k-row pass), while the per-file stats keep
-    byte-identical JSON by feeding the SAME ``StatsAccumulator`` from
-    a pandas conversion that replicates Spark's own arrow→pandas
-    semantics (probe-verified identical dtypes/values for every
-    engine type; the one divergence — tz-aware µs timestamps vs the
-    serializer's session-localized naive ns — is normalized here, and
-    pinned byte-identical in tests/test_delta_write.py across NaN
-    floats, null ints, object strings, datetimes, dates, bools and
-    arrays). Partition grouping runs the same pandas ``groupby`` over
-    just the partition columns, so hive keys take the exact
-    ``norm_pkey`` path the pandas factory uses.
-
-    One deliberate divergence, strictly toward correctness: the
-    pandas factory's ``Table.from_pandas`` roundtrip folds float NaN
-    (top-level and nested) to NULL and rounds null-bearing int64
-    through float64; writing the original Arrow buffers preserves
-    both exactly — matching the JVM-native write path. Any query for
-    which this could change results would already be hash-failing
-    against the oracle today (the oracle computes from the original
-    parquet inputs), and the full-registry sweep re-verified green
-    under this factory."""
-
-    def write_partition(batches) -> "Iterator":
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        arrow_schema = pa.ipc.read_schema(pa.BufferReader(arrow_schema_bytes))
-        data_fields = [f for f in arrow_schema.names if f not in partition_by]
-        data_schema = pa.schema([arrow_schema.field(f) for f in data_fields])
-
-        def norm_pkey(values: tuple) -> tuple:
-            # identical branches to the pandas factory's norm_pkey —
-            # the group keys come out of the same pandas groupby (ts
-            # columns pre-normalized to naive session time in
-            # _to_spark_pandas, matching Spark's serializer)
-            out = []
-            for col, v in zip(partition_by, values):
-                if v is None or (isinstance(v, float) and v != v):
-                    out.append(None)
-                    continue
-                t = arrow_schema.field(col).type
-                if pa.types.is_integer(t):
-                    v = int(v)
-                elif pa.types.is_boolean(t):
-                    v = "true" if v else "false"
-                elif hasattr(v, "isoformat"):
-                    v = v.isoformat(sep=" ")
-                out.append(v)
-            return tuple(out)
-
-        def _to_spark_pandas(tbl: "pa.Table") -> "pd.DataFrame":
-            # pa.Table.to_pandas matches Spark's arrow→pandas
-            # conversion for every engine type except tz-aware
-            # timestamps, which Spark localizes to the session tz and
-            # strips (probe-verified; the stats pin test enforces it)
+        def _to_pandas(tbl: "pa.Table") -> "pd.DataFrame":
             pdf = tbl.to_pandas()
             for name in tbl.schema.names:
                 t = tbl.schema.field(name).type
                 if pa.types.is_timestamp(t) and t.tz is not None:
                     pdf[name] = (
-                        pdf[name]
-                        .dt.tz_convert(session_tz)
-                        .dt.tz_localize(None)
+                        pdf[name].dt.tz_convert("UTC").dt.tz_localize(None)
                     )
             return pdf
 
@@ -290,32 +167,21 @@ def _write_partition_factory_arrow(
                 data_schema,
                 compression="snappy",
             )
-            state = (
+            writers[pkey] = state = (
                 w,
                 rel_path,
-                {
-                    "stats": StatsAccumulator(
-                        max_cols=stats_spec[0], stats_columns=stats_spec[1]
-                    ),
-                    "rows": 0,
-                },
+                StatsAccumulator(
+                    max_cols=stats_spec[0], stats_columns=stats_spec[1]
+                ),
             )
-            writers[pkey] = state
             return state
 
         for b in batches:
             if not b.num_rows:
                 continue
             tblb = pa.Table.from_batches([b])
-            # stats frames are converted once per BATCH and sliced per
-            # group: the pandas factory's dtypes are decided by
-            # batch-wide null presence (a null bool/int anywhere in
-            # the batch turns the whole column object/float64, which
-            # changes which stats get emitted), so a per-group
-            # conversion would not be byte-compatible
-            data_pdf = _to_spark_pandas(tblb.select(data_fields))
             if partition_by:
-                pk = _to_spark_pandas(tblb.select(partition_by))
+                pk = _to_pandas(tblb.select(partition_by))
                 idx = pk.groupby(
                     partition_by, dropna=False, sort=False
                 ).indices
@@ -328,17 +194,12 @@ def _write_partition_factory_arrow(
             for pkey, ix in items:
                 pkey = norm_pkey(pkey)
                 w, rel_path, acc = get_writer(pkey)
-                if ix is None:
-                    gdata, gpdf, n_rows = tblb.select(data_fields), data_pdf, tblb.num_rows
-                else:
-                    gdata = tblb.take(pa.array(ix)).select(data_fields)
-                    gpdf = data_pdf.iloc[ix]
-                    n_rows = len(ix)
+                gdata = tblb if ix is None else tblb.take(pa.array(ix))
+                gdata = gdata.select(data_fields)
                 if gdata.schema != data_schema:
                     gdata = gdata.cast(data_schema)
                 w.write_table(gdata)
-                acc["stats"].update(gpdf)
-                acc["rows"] += n_rows
+                acc.update(_to_pandas(gdata))
 
         out_rows = []
         for pkey, (w, rel_path, acc) in writers.items():
@@ -347,91 +208,28 @@ def _write_partition_factory_arrow(
             pvals = {
                 col: _partition_str(v) for col, v in zip(partition_by, pkey)
             }
-            stats = acc["stats"].to_json() if acc["rows"] else None
             out_rows.append(
                 {
                     "path": rel_path,
                     "size": os.path.getsize(abs_path),
                     "partition_json": json.dumps(pvals),
-                    "num_records": acc["rows"],
-                    "stats": stats,
+                    "num_records": acc.num,
+                    "stats": acc.to_json() if acc.num else None,
                 }
             )
         if out_rows:
-            import pyarrow as pa2
-
-            yield pa2.RecordBatch.from_pylist(
-                out_rows,
-                schema=pa2.schema(
-                    [
-                        pa2.field("path", pa2.string()),
-                        pa2.field("size", pa2.int64()),
-                        pa2.field("partition_json", pa2.string()),
-                        pa2.field("num_records", pa2.int64()),
-                        pa2.field("stats", pa2.string()),
-                    ]
-                ),
+            yield pa.RecordBatch.from_pylist(
+                out_rows, schema=_spark_to_arrow_schema(_ADD_ROW_SCHEMA)
             )
 
     return write_partition
 
 
-def run_partition_write(
-    df: DataFrame,
-    data_root: str,
-    partition_by: list[str],
-    stats_spec: tuple = (32, None),
-) -> list:
-    """ONE executor write pass over ``df`` into ``data_root`` →
-    collected add-row metadata — the shared Python-side write boundary
-    of every DML rewrite, OPTIMIZE, CDC and ``to_delta(engine='arrow')``
-    (r17: hoisted from five duplicated call sites). Dispatches between
-    the mapInArrow factory (default — no pandas detour for row data)
-    and the original mapInPandas factory
-    (``SPARK_GRAFT_ARROW_WRITE_FACTORY=0``), which stays as the pinned
-    byte-compat reference."""
-    arrow_schema = _spark_to_arrow_schema(df.schema)
-    schema_bytes = arrow_schema.serialize().to_pybytes()
-    try:
-        tz = df.sparkSession.conf.get(
-            "spark.sql.session.timeZone", "UTC"
-        ) or "UTC"
-    except Exception:
-        tz = "UTC"
-    # Non-UTC sessions take the pandas factory (review r17): the arrow
-    # factory writes timestamp data as the UTC instant but would feed
-    # StatsAccumulator the session-LOCALIZED naive wall time, so a
-    # non-UTC session would get file stats inconsistent with the file's
-    # own rows (a stats-based skip could prune files that match). The
-    # pandas reference path is self-consistent (data and stats both
-    # carry the session wall time). The engine pins UTC in ENGINE_CONF,
-    # so this branch only fires for foreign sessions.
-    if (
-        os.environ.get("SPARK_GRAFT_ARROW_WRITE_FACTORY", "1") == "1"
-        and tz in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00")
-    ):
-        fn = _write_partition_factory_arrow(
-            data_root,
-            partition_by,
-            schema_bytes,
-            stats_spec=stats_spec,
-            session_tz=tz,
-        )
-        return df.mapInArrow(fn, schema=_ADD_ROW_SCHEMA).collect()
-    fn = _write_partition_factory(
-        data_root, partition_by, schema_bytes, stats_spec=stats_spec
-    )
-    return df.mapInPandas(fn, schema=_ADD_ROW_SCHEMA).collect()
-
-
 # Below this many output files the footer-harvest pass runs as a
 # driver-side loop instead of an RDD job (see _write_files_native).
 # Local footer reads are ~3 ms each vs a fixed ~150 ms job dispatch,
-# so the breakeven sits near 50; overridable for cluster profiles
-# where the driver is remote from the data.
-_FOOTER_HARVEST_DRIVER_MAX = int(
-    os.environ.get("SPARK_GRAFT_FOOTER_HARVEST_DRIVER_MAX", "48")
-)
+# so the breakeven sits near 50.
+_FOOTER_HARVEST_DRIVER_MAX = 48
 
 
 def _harvest_footer(args: tuple) -> tuple:
@@ -541,18 +339,23 @@ def _write_files_native(
     partition_by: list[str],
     stats_spec: tuple = (32, None),
 ) -> list:
-    """Native write path: the JVM parquet writer (whole-stage codegen,
-    zero Python in the row path) writes into a staging dir, a parallel
-    footer-harvest pass builds the per-file stats, and the files are
-    renamed into the table layout. Measured at sf0.1 lineitem (600k
-    rows, warm): 1.23s vs the Arrow-in-Python path's 1.71s
-    unpartitioned; ~par when partitioned (the harvest job's fixed cost
-    dominates at this scale). The structural win is that NO row data
-    crosses the JVM↔Python boundary — at 100 TB the Arrow path spends
-    its time serializing batches into Python workers, the native path
-    stays inside whole-stage codegen. The Arrow path remains for
-    environments where the write must stay in Python
-    (``engine="arrow"``).
+    """Phase 1 of every write except ``to_delta(engine="arrow")``:
+    appends, COW DML rewrites, merge-on-read UPDATE images, OPTIMIZE /
+    z-order and CDC ``_change_data`` files. The JVM parquet writer
+    (whole-stage codegen, zero Python in the row path) writes into a
+    staging dir, a footer-harvest pass builds the per-file stats, and
+    the files are renamed into the table layout. Measured at sf0.1
+    lineitem (600k rows, warm): 1.23s vs the Arrow-in-Python path's
+    1.71s unpartitioned; ~par when partitioned. No row data crosses
+    the JVM↔Python boundary.
+
+    Stats come from each file's own parquet footer, so a rewritten
+    file's stats JSON equals what an append of the same rows writes
+    (pinned in tests/test_delta_write.py). Against the Python
+    rewrite factories this path replaced, on the same rows: ints with
+    nulls get int min/max (not ``1.0``); dates and bools get min/max;
+    timestamps carry ``+00:00``; NaN no longer counts in
+    ``nullCount``; nested arrays are left out of ``nullCount``.
 
     Filesystem routing: Spark writes the staging files through
     whatever the path's scheme resolves to for the JVM (local disk,
@@ -1807,9 +1610,13 @@ def to_delta(
                 f"in Python workers; {table_path!r} has no local "
                 "mapping — use engine='native' (Hadoop FS data path)."
             )
-        add_rows = run_partition_write(
-            df, data_root, partition_by, stats_spec=_stats_spec
+        fn = _write_partition_factory_arrow(
+            data_root,
+            partition_by,
+            _spark_to_arrow_schema(df.schema).serialize().to_pybytes(),
+            stats_spec=_stats_spec,
         )
+        add_rows = df.mapInArrow(fn, schema=_ADD_ROW_SCHEMA).collect()
     if _rw_persisted is not None:
         # files are on disk — the validated rows have been consumed
         _rw_persisted.unpersist()

@@ -544,32 +544,44 @@ def test_expired_tombstone_lite_loses_candidate_full_reclaims(
     assert read_delta(p, spark=spark).count() == 10
 
 
-def test_arrow_write_factory_byte_compat_stats_and_content(
-    spark, tmp_path, monkeypatch
-):
-    """r17 (VERDICT r16 #1): the mapInArrow write factory must produce
-    BYTE-IDENTICAL per-file stats JSON to the mapInPandas factory and
-    identical logical table content, across the divergence classes the
-    r16 deferral named: NaN-bearing floats, null-bearing ints,
-    object strings (incl. empty and NULL), datetimes (the session-tz
-    localization), dates, bools with nulls, and double arrays —
-    unpartitioned AND hive-partitioned (same dir naming)."""
+def _edge_corpus(spark, n=4):
+    """NaN/inf doubles, null-bearing longs, strings with "" and NULL,
+    timestamps, dates, bools with nulls and double arrays; ``pk``
+    alternates 10/11. ``n`` > 4 repeats the pattern with fresh ids."""
     import datetime
+
+    base = [
+        (1.5, "b", datetime.datetime(2021, 1, 2, 3, 4, 5, 123456),
+         datetime.date(2021, 3, 4), True, [1.0, 2.0]),
+        (float("nan"), None, None, None, None, None),
+        (-0.25, "", datetime.datetime(2022, 6, 7),
+         datetime.date(2022, 8, 9), False, []),
+        (float("inf"), "a", datetime.datetime(2020, 12, 31, 23, 59, 59),
+         datetime.date(2020, 1, 1), None, [3.5]),
+    ]
+    rows = [
+        (k, None if k % 4 == 2 else k * 3) + base[k % 4] + (10 + k % 2,)
+        for k in range(n)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "id long, i long, d double, s string, ts timestamp, dt date, "
+        "b boolean, arr array<double>, pk int",
+    )
+
+
+def test_arrow_write_factory_byte_compat_stats_and_content(spark, tmp_path):
+    """``to_delta(engine="arrow")`` per-file stats JSON is byte-identical
+    to ``stats_from_pandas`` over that file's rows as Spark converts
+    them to pandas, across NaN-bearing floats, null-bearing ints,
+    strings (incl. empty and NULL), timestamps, dates, bools with
+    nulls and double arrays — unpartitioned AND hive-partitioned. Its
+    rows and hive dirs equal an ``engine="native"`` write."""
     import json
 
-    df = spark.createDataFrame(
-        [
-            (1, 1.5, "b", datetime.datetime(2021, 1, 2, 3, 4, 5, 123456),
-             datetime.date(2021, 3, 4), True, [1.0, 2.0], 10),
-            (2, float("nan"), None, None, None, None, None, 11),
-            (None, -0.25, "", datetime.datetime(2022, 6, 7),
-             datetime.date(2022, 8, 9), False, [], 10),
-            (4, float("inf"), "a", datetime.datetime(2020, 12, 31, 23, 59, 59),
-             datetime.date(2020, 1, 1), None, [3.5], 11),
-        ],
-        "i long, d double, s string, ts timestamp, dt date, b boolean, "
-        "arr array<double>, pk int",
-    )
+    from dask_deltalake_spark.delta.protocol import stats_from_pandas
+
+    df = _edge_corpus(spark).coalesce(1)
 
     def stats_of(path):
         snap = DeltaLog(path).snapshot()
@@ -583,45 +595,38 @@ def test_arrow_write_factory_byte_compat_stats_and_content(
             map(repr, (tuple(r) for r in read_delta(path, spark=spark).collect()))
         )
 
-    results = {}
-    for gate in ("1", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_WRITE_FACTORY", gate)
-        base = tmp_path / f"g{gate}"
-        p_unpart = str(base / "unpart")
-        to_delta(df.coalesce(1), p_unpart, engine="arrow")
-        p_part = str(base / "part")
-        to_delta(df.coalesce(1), p_part, partition_by=["pk"], engine="arrow")
-        # partitioned hive dirs must be named identically
-        dirs = sorted(
-            d for d in os.listdir(p_part) if d.startswith("pk=")
+    def hive_dirs(path):
+        return sorted(d for d in os.listdir(path) if d.startswith("pk="))
+
+    out = {}
+    for engine in ("arrow", "native"):
+        p_unpart = str(tmp_path / engine / "unpart")
+        p_part = str(tmp_path / engine / "part")
+        to_delta(df, p_unpart, engine=engine)
+        to_delta(df, p_part, partition_by=["pk"], engine=engine)
+        out[engine] = (p_unpart, p_part)
+
+    p_unpart, p_part = out["arrow"]
+    assert stats_of(p_unpart) == [("{}", stats_from_pandas(df.toPandas()))]
+    expected = sorted(
+        (
+            json.dumps({"pk": str(v)}),
+            stats_from_pandas(df.filter(F.col("pk") == v).drop("pk").toPandas()),
         )
-        results[gate] = (
-            stats_of(p_unpart), rows_of(p_unpart),
-            stats_of(p_part), rows_of(p_part), dirs,
-        )
-    # NaN: the pandas factory folds NaN->NULL on write; the arrow
-    # factory preserves NaN exactly (documented divergence toward the
-    # JVM-native path). Compare content modulo that one cell class by
-    # replaying the pandas factory's fold on the expected side.
-    a, p = results["1"], results["0"]
-    assert a[0] == p[0], "unpartitioned stats JSON must be byte-identical"
-    assert a[2] == p[2], "partitioned stats JSON must be byte-identical"
-    assert a[4] == p[4], "hive partition dirs must match"
-    fold = lambda rows: [r.replace("nan", "None") for r in rows]
-    assert fold(a[1]) == fold(p[1])
-    assert fold(a[3]) == fold(p[3])
+        for v in (10, 11)
+    )
+    assert stats_of(p_part) == expected
+    n_unpart, n_part = out["native"]
+    assert rows_of(p_unpart) == rows_of(n_unpart)
+    assert rows_of(p_part) == rows_of(n_part)
+    assert hive_dirs(p_part) == hive_dirs(n_part) == ["pk=10", "pk=11"]
 
 
-def test_non_utc_session_write_is_stats_consistent(
-    spark, tmp_path, monkeypatch
-):
-    """review r17: on a non-UTC session the arrow factory would write
-    timestamp data as the UTC instant while feeding StatsAccumulator
-    the session-LOCALIZED wall time — file stats inconsistent with the
-    file's own rows (a stats-based skip could prune matching files).
-    Non-UTC sessions must dispatch to the self-consistent pandas
-    factory: under either gate value the add-action stats AND the raw
-    stored parquet values must be identical."""
+def test_non_utc_session_write_is_stats_consistent(spark, tmp_path):
+    """On a non-UTC session both write engines store the same instants,
+    and every file's ``ts`` min/max bracket the values that file
+    stores: stats describe the stored instants, never the session's
+    wall time (a stats-based skip must not prune files that match)."""
     import datetime
     import json
 
@@ -634,47 +639,101 @@ def test_non_utc_session_write_is_stats_consistent(
         ],
         "i long, ts timestamp",
     )
+
+    def as_utc(iso):
+        t = datetime.datetime.fromisoformat(iso)
+        return t if t.tzinfo else t.replace(tzinfo=datetime.timezone.utc)
+
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        results = {}
-        for gate in ("1", "0"):
-            monkeypatch.setenv("SPARK_GRAFT_ARROW_WRITE_FACTORY", gate)
-            p = str(tmp_path / f"tz{gate}")
-            to_delta(df.coalesce(1), p, engine="arrow")
-            snap = DeltaLog(p).snapshot()
-            (add,) = snap.add_actions
-            raw = (
-                pq.read_table(os.path.join(p, add.path))
-                .column("ts")
-                .to_pylist()
-            )
-            results[gate] = (json.loads(add.stats), sorted(map(repr, raw)))
-        assert results["1"] == results["0"]
+        stored = {}
+        for engine in ("arrow", "native"):
+            p = str(tmp_path / engine)
+            to_delta(df.coalesce(1), p, engine=engine)
+            raw = []
+            for add in DeltaLog(p).snapshot().add_actions:
+                vals = pq.read_table(os.path.join(p, add.path)).column("ts")
+                vals = [v for v in vals.to_pylist() if v is not None]
+                stats = json.loads(add.stats)
+                lo = as_utc(stats["minValues"]["ts"])
+                hi = as_utc(stats["maxValues"]["ts"])
+                assert all(lo <= v <= hi for v in vals), (engine, stats, vals)
+                raw.extend(vals)
+            stored[engine] = sorted(raw)
+        assert stored["arrow"] == stored["native"]
+        assert len(stored["native"]) == 2
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
-def test_arrow_write_factory_dml_rewrite_matches(spark, tmp_path, monkeypatch):
-    """The DML rewrite boundary (delete_where COW) through both
-    factories: same surviving rows, same per-file stats JSON."""
+@pytest.mark.parametrize(
+    "partition_by, tz",
+    [([], "UTC"), (["pk"], "UTC"), (["pk"], "America/New_York")],
+    ids=["unpartitioned", "partitioned", "new_york"],
+)
+def test_rewrite_stats_match_native_append(spark, tmp_path, partition_by, tz):
+    """Every file a rewrite writes — COW DELETE, merge-on-read UPDATE,
+    MERGE, z-order OPTIMIZE and a DELETE on a change-data-feed table —
+    carries the stats JSON a native ``to_delta`` of the same rows
+    writes: rewrites and appends share one stats source (the parquet
+    footer) over the edge corpus, unpartitioned, partitioned and under
+    a non-UTC session."""
     import json
+    from urllib.parse import unquote
 
-    from dask_deltalake_spark.delta.mutate import delete_where
+    from dask_deltalake_spark.delta.cdc import enable_change_data_feed
+    from dask_deltalake_spark.delta.mutate import (
+        delete_where,
+        merge_into,
+        update_where,
+    )
 
-    rows = {}
-    stats = {}
-    for gate in ("1", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_WRITE_FACTORY", gate)
-        p = str(tmp_path / f"dml{gate}")
-        to_delta(sample_df(spark).repartition(2), p)
-        delete_where(p, [("ints", "==", 2)], spark=spark)
-        rows[gate] = sorted(
-            tuple(r) for r in read_delta(p, spark=spark).collect()
-        )
-        snap = DeltaLog(p).snapshot()
-        stats[gate] = sorted(
-            json.loads(a.stats)["numRecords"] for a in snap.add_actions
-        )
-    assert rows["1"] == rows["0"]
-    assert stats["1"] == stats["0"]
+    p = str(tmp_path / "t")
+    corpus = _edge_corpus(spark, n=24)
+
+    def commit_adds(version):
+        with open(os.path.join(p, "_delta_log", f"{version:020d}.json")) as fh:
+            actions = [json.loads(line) for line in fh if line.strip()]
+        return [a["add"] for a in actions if "add" in a]
+
+    def native_stats(add, k):
+        rows = spark.read.parquet(os.path.join(p, unquote(add["path"])))
+        for col, v in add["partitionValues"].items():
+            rows = rows.withColumn(col, F.lit(v).cast("int"))
+        out = str(tmp_path / f"native{k}")
+        to_delta(rows.coalesce(1), out, partition_by=partition_by)
+        (ref,) = DeltaLog(out).snapshot().add_actions
+        return ref.stats
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        to_delta(corpus.repartition(3), p, partition_by=partition_by)
+        src = _edge_corpus(spark, n=30).filter(F.col("id") >= 20)
+        ops = [
+            ("cow_delete", lambda: delete_where(p, [("id", "<", 3)], spark=spark)),
+            ("mor_update", lambda: update_where(
+                p, [("id", ">=", 16)], {"d": F.col("d") * 2},
+                spark=spark, strategy="merge-on-read")),
+            ("merge", lambda: merge_into(p, src, keys=["id"], spark=spark)),
+            ("zorder", lambda: optimize(p, zorder_by=["id", "d"], spark=spark)),
+            ("cdf_delete", lambda: (
+                enable_change_data_feed(p),
+                delete_where(p, [("id", "==", 5)], spark=spark),
+            )),
+        ]
+        k = 0
+        for name, op in ops:
+            before = {a.path for a in DeltaLog(p).snapshot().add_actions}
+            op()
+            version = DeltaLog(p).snapshot().version
+            fresh = [a for a in commit_adds(version) if a["path"] not in before]
+            assert fresh, f"{name} wrote no file"
+            if name == "cdf_delete":
+                assert os.listdir(os.path.join(p, "_change_data"))
+            for add in fresh:
+                k += 1
+                assert add["stats"] == native_stats(add, k), (name, add["path"])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
